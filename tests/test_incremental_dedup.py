@@ -209,3 +209,53 @@ def test_dedup_stream_demo_dup_free_corpus_returns_empty_panel(spark, tmp_path, 
     out = dedup_stream_demo(docs)
     assert out.columns == ["doc_a", "doc_b", "jaccard", "batch_id"]
     assert out.count() == 0
+
+
+def _batches(spark, n_batches):
+    """Five-doc batches: each repeats one text of the previous batch, so
+    every batch after the first emits a cross-batch pair."""
+    texts = [
+        " ".join(f"w{b}_{d}_{i} t{i * 7 % 13}" for i in range(20))
+        for b in range(n_batches)
+        for d in range(5)
+    ]
+    out = []
+    for b in range(n_batches):
+        rows = [(b * 5 + d, texts[b * 5 + d]) for d in range(5)]
+        if b:
+            rows.append((1000 + b, texts[(b - 1) * 5]))
+        out.append(spark.createDataFrame(rows, "doc_id long, text string"))
+    return out
+
+
+def test_collecting_returned_pairs_runs_one_job(spark, tmp_path):
+    """add_batch materializes its pairs once: the index's own appends
+    (which drop every cached plan reading the written directory) must not
+    make the caller's collect re-run the batch pipeline."""
+    sc = spark.sparkContext
+    idx = IncrementalDedupIndex(spark, str(tmp_path / "idx"))
+    b1, b2 = _batches(spark, 2)
+    idx.add_batch(b1)
+    pairs = idx.add_batch(b2)
+    group = "test_collecting_returned_pairs_runs_one_job"
+    sc.setJobGroup(group, group)
+    try:
+        got = {(r.doc_a, r.doc_b) for r in pairs.collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == {(0, 1001)}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+
+
+def test_checkpoint_storage_stays_bounded(spark, tmp_path):
+    """Each add_batch frees the previous batch's checkpoint blocks
+    (unpersist() alone does not free a localCheckpoint), so cached RDDs
+    do not pile up as batches arrive."""
+    idx = IncrementalDedupIndex(spark, str(tmp_path / "idx"))
+    counts = []
+    for k, batch in enumerate(_batches(spark, 5)):
+        got = {(r.doc_a, r.doc_b) for r in idx.add_batch(batch).collect()}
+        assert got == ({(5 * (k - 1), 1000 + k)} if k else set())
+        counts.append(len(spark.sparkContext._jsc.sc().getRDDStorageInfo()))
+    assert counts[4] <= counts[1], counts

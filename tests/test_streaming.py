@@ -718,3 +718,29 @@ def test_stream_shuffle_partitions_validation(spark, monkeypatch):
         with stream_shuffle_partitions(spark, default=0):
             pass  # pragma: no cover
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_stream_shuffle_partitions_error_names_its_source(spark, monkeypatch):
+    """The error names where the bad value came from: the env var when it
+    is set (it wins over the argument), else the ``default`` argument —
+    never the env var for a value the caller passed."""
+    import pytest
+
+    from xboard_spark.streaming.conf import (
+        STREAM_SHUFFLE_PARTITIONS_ENV,
+        stream_shuffle_partitions,
+    )
+
+    monkeypatch.delenv(STREAM_SHUFFLE_PARTITIONS_ENV, raising=False)
+    for bad in (0, -4, "banana"):
+        with pytest.raises(ValueError) as err:
+            with stream_shuffle_partitions(spark, default=bad):
+                pass  # pragma: no cover
+        assert "default" in str(err.value)
+        assert STREAM_SHUFFLE_PARTITIONS_ENV not in str(err.value)
+
+    monkeypatch.setenv(STREAM_SHUFFLE_PARTITIONS_ENV, "0")
+    with pytest.raises(ValueError) as err:
+        with stream_shuffle_partitions(spark, default=4):
+            pass  # pragma: no cover
+    assert str(err.value).startswith(STREAM_SHUFFLE_PARTITIONS_ENV)

@@ -3,7 +3,9 @@ methodology the round notes use to confirm/deny driver-bench drift
 (caches cleared + GC between attempts, same warmup as bench.py).
 
 Usage: python tools/solo_bench.py <query>[,<query>...] [n_attempts] [sf_dir]
-Prints one JSON line per query: {"query": ..., "attempts": [...], "min": ...}.
+Prints one JSON line per query: {"query": ..., "attempts": [...], "min": ...};
+a streaming demo query also gets "steady": the per-attempt micro-batch
+execution seconds of its progress events (``LAST_DEMO_TIMINGS``).
 (Several comma-separated queries share one session + warmup — the
 per-attempt protocol, cache clear + GC, is identical either way.)
 """
@@ -33,6 +35,7 @@ def main() -> None:
 
     from xboard_spark.io import TESTDATA_TABLES, read_table
     from xboard_spark.session import get_spark
+    from xboard_spark.streaming.dedup import LAST_DEMO_TIMINGS
 
     spark = get_spark()
     for t in TESTDATA_TABLES:
@@ -42,20 +45,21 @@ def main() -> None:
     registry = entry.queries()
     for qname in name.split(","):
         fn = registry[qname]
-        attempts = []
+        attempts, steady = [], []
         for _ in range(n):
+            LAST_DEMO_TIMINGS.clear()
             spark.catalog.clearCache()
             gc.collect()
             spark.sparkContext._jvm.System.gc()
             t0 = time.time()
             fn(spark, sf_dir).collect()
             attempts.append(round(time.time() - t0, 3))
-        print(
-            json.dumps(
-                {"query": qname, "attempts": attempts, "min": min(attempts)}
-            ),
-            flush=True,
-        )
+            if "steady_sec" in LAST_DEMO_TIMINGS:
+                steady.append(LAST_DEMO_TIMINGS["steady_sec"])
+        out = {"query": qname, "attempts": attempts, "min": min(attempts)}
+        if steady:
+            out["steady"] = steady
+        print(json.dumps(out), flush=True)
 
 
 if __name__ == "__main__":

@@ -28,6 +28,7 @@ from xboard_spark.operators.dedup import (
     minhash_signatures,
     shingle_index,
 )
+from xboard_spark.plans.observe import observed
 from xboard_spark.streaming.conf import stream_shuffle_partitions
 
 
@@ -38,23 +39,32 @@ class IncrementalDedupIndex:
     appends are partition appends; here they are plain parquet dirs.
     """
 
+    # the schemas add_batch writes: _read passes them, so opening a table
+    # never runs a parquet footer-inference job (one per table per batch)
+    SCHEMAS = {
+        "inv": "doc_id long, shfp long",
+        "bands": "doc_id long, band int, bh long",
+        "sizes": "doc_id long, n_sh long",
+    }
+
     def __init__(self, spark: SparkSession, path: str, tau: float = 0.5,
                  max_df: int = 100):
         self.spark = spark
         self.path = path
         self.tau = tau
         self.max_df = max_df
-        self._live: list[DataFrame] = []  # persisted frames of the last batch
+        self._live: list[DataFrame] = []  # checkpointed frames of the last batch
 
     def _read(self, name: str) -> DataFrame | None:
-        """Read the index SNAPSHOTTED to the concrete part files present now.
+        """Read one index table pinned to the part files present NOW.
 
-        Reading the directory would make the plan re-list files on any
-        recompute — and this class appends to that directory mid-batch, so a
-        cascade-unpersist recompute would see its own batch in the "old"
-        index and anti-join the batch's documents away. Explicit file paths
-        pin the input set; recompute is deterministic no matter when it runs.
-        """
+        add_batch calls this when a batch starts and then appends to the
+        same directories. Every parquet write ends in Spark's
+        ``CacheManager.recacheByPath`` on the written path, which drops
+        every cached plan reading it; a directory read re-run after that
+        would re-list the files, see the batch's own rows in the "old"
+        index and anti-join the batch's documents away. Explicit file
+        paths keep the input set fixed however late a plan runs."""
         p = os.path.join(self.path, name)
         if os.path.exists(p):
             files = sorted(
@@ -63,7 +73,7 @@ class IncrementalDedupIndex:
                 if f.endswith(".parquet")
             )
             if files:
-                return self.spark.read.parquet(*files)
+                return self.spark.read.schema(self.SCHEMAS[name]).parquet(*files)
         return None
 
     # target rows per written index file: 2-long rows ≈ 16 bytes raw, so
@@ -73,17 +83,37 @@ class IncrementalDedupIndex:
 
     def _append(self, df: DataFrame, name: str, n_rows: int | None = None) -> None:
         if n_rows is not None:
-            # Right-size the append: the cached micro-batch frame inherits
-            # the shuffle partitioning of its build (32 near-empty
+            # Right-size the append: the materialized micro-batch frame
+            # inherits the shuffle partitioning of its build (32 near-empty
             # partitions locally — measured 64 files per 2 MiB of index
             # after two batches, each a parquet footer the NEXT batch's
-            # _read pays to list and open). coalesce on the cached frame
-            # merges partitions without a shuffle; k grows linearly with
-            # batch size so a 100 TB batch still writes full-size files.
+            # _read pays to list and open). coalesce on the materialized
+            # frame merges partitions without a shuffle; k grows linearly
+            # with batch size so a 100 TB batch still writes full-size files.
             k = max(1, min(df.rdd.getNumPartitions(),
                            -(-n_rows // self.ROWS_PER_FILE)))
             df = df.coalesce(k)
         df.write.mode("append").parquet(os.path.join(self.path, name))
+
+    def _checkpoint(self, df: DataFrame) -> DataFrame:
+        """Run ``df`` once into an eager local checkpoint owned by this
+        batch. The result's plan is an RDD scan, so no later write can
+        invalidate it and no later action recomputes it."""
+        df = df.localCheckpoint(eager=True)
+        self._live.append(df)
+        return df
+
+    def _checkpoint_counted(self, df: DataFrame, name: str) -> tuple[DataFrame, int]:
+        """``_checkpoint`` plus the row count, observed on the same job."""
+        df, obs = observed(df, f"{name}_rows", F.count(F.lit(1)).alias("n"))
+        df = self._checkpoint(df)
+        return df, obs.get["n"]
+
+    @staticmethod
+    def _release(df: DataFrame) -> None:
+        # unpersist() does not free a localCheckpoint: its blocks belong to
+        # the RDD under the frame's LogicalRDD plan, so unpersist that RDD
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
     def add_batch(
         self, documents: DataFrame, on_pairs=None
@@ -103,6 +133,22 @@ class IncrementalDedupIndex:
         checkpoint loss, at-least-once source — is a no-op instead of
         double-counting its shingles in every future Jaccard.
 
+        Each per-batch frame (raw and filtered shingles, bands, sizes,
+        pairs) is computed ONCE, into an eager ``localCheckpoint``. Their
+        plans read the index's own parquet directories, and every append
+        below ends in Spark's ``CacheManager.recacheByPath`` on the
+        directory it wrote, which drops every cached plan reading it: the
+        ``persist()``ed frames this replaced were discarded by the
+        class's own appends, and each later action — the append counts,
+        the caller's collect of ``pairs`` — re-ran the whole batch
+        pipeline (47 jobs per warm 40-document batch, 13 of them in the
+        caller's collect). A checkpoint's plan is an RDD scan no write can
+        invalidate. The row counts the appends size their files by ride
+        the checkpoint jobs as Observations. The returned ``pairs`` is
+        one of these checkpoints: reading it costs one job, and it stays
+        readable until the next ``add_batch``, which frees the previous
+        batch's checkpoint blocks.
+
         ``on_pairs`` (the sink hook) runs AFTER the pairs materialize but
         BEFORE the index grows. Ordering is the durability contract: a
         crash inside ``on_pairs`` leaves the index unchanged, so the
@@ -110,33 +156,37 @@ class IncrementalDedupIndex:
         pairs after the appends — the old shape — meant a crash between
         them silently lost the batch's pairs forever: the replay's
         anti-join dropped every document and returned nothing). Of the
-        two appends, ``inv`` goes LAST because the anti-join keys on it —
+        appends, ``inv`` goes LAST because the anti-join keys on it —
         it is the commit marker; a crash between the appends leaves
-        orphan band rows whose duplicate candidates the ``distinct()``
-        absorbs on the replay, losing nothing."""
-        # Release the previous batch's persisted frames now (NOT at the end
-        # of this call): Spark cascade-unpersists dependent cached plans, so
-        # unpersisting inv_new before the caller consumes `pairs` would
-        # silently drop the pairs cache too.
+        orphan band and sizes rows whose duplicates the candidate
+        ``distinct()`` and the sizes dedup absorb on the replay, losing
+        nothing."""
         for df in self._live:
-            df.unpersist()
+            self._release(df)
         self._live = []
-        inv_old = self._read("inv")
+        inv_old, bands_old, sizes_old = (
+            self._read(name) for name in ("inv", "bands", "sizes")
+        )
+        # doc_id is long in the index whatever the caller's type (the
+        # stream's source schema already reads it as long)
+        documents = documents.withColumn("doc_id", F.col("doc_id").cast("long"))
         if inv_old is not None:
             documents = documents.join(
                 inv_old.select("doc_id").distinct(), "doc_id", "left_anti"
             )
-        # Persist the batch's RAW shingle index before the df filter: the
-        # filter shape references it twice (df aggregate + probe), and
-        # without the cache each reference re-derived the whole
-        # JSON-parse -> anti-join -> tokenize -> window -> fingerprint
-        # subtree per micro-batch (measured 2.1-2.4 s of each batch at
-        # sf0.1 — the largest single stage). Released via _live like the
-        # other per-batch frames.
-        raw_inv = shingle_index(documents).persist()
-        inv_new = filtered_index(raw_inv, self.max_df).persist()
-        sigs_new = minhash_signatures(inv_new)
-        bands_new = band_hashes(sigs_new).persist()
+        # the df filter references the raw shingle index twice (df
+        # aggregate + probe): materialized, the JSON-parse -> anti-join ->
+        # tokenize -> window -> fingerprint subtree runs once; freed as soon
+        # as the filtered index is materialized
+        raw_inv = self._checkpoint(shingle_index(documents))
+        inv_new, n_inv = self._checkpoint_counted(
+            filtered_index(raw_inv, self.max_df), "inv"
+        )
+        self._live.remove(raw_inv)
+        self._release(raw_inv)
+        bands_new, n_bands = self._checkpoint_counted(
+            band_hashes(minhash_signatures(inv_new)), "bands"
+        )
         # Doc sizes as index STATE: a doc's filtered shingle-set size is
         # fixed the moment it is indexed (the df cap is batch-local, inv
         # rows are written once), so (doc_id, n_sh) is appended alongside
@@ -146,17 +196,14 @@ class IncrementalDedupIndex:
         # dropDuplicates on the union is the replay guard: a crash between
         # the sizes and inv appends leaves orphan sizes rows whose docs
         # re-enter on replay with IDENTICAL values, so dedup is exact.
-        sizes_new = (
-            inv_new.groupBy("doc_id").agg(F.count("*").alias("n_sh")).persist()
+        sizes_new, n_sizes = self._checkpoint_counted(
+            inv_new.groupBy("doc_id").agg(F.count("*").alias("n_sh")), "sizes"
         )
-        sizes_old = self._read("sizes")
         all_sizes = (
             sizes_new
             if sizes_old is None
             else sizes_old.unionByName(sizes_new).dropDuplicates(["doc_id"])
         )
-
-        bands_old = self._read("bands")
         all_bands = (
             bands_new if bands_old is None else bands_old.unionByName(bands_new)
         )
@@ -181,33 +228,27 @@ class IncrementalDedupIndex:
             .distinct()
         )
         # exact verify on the combined shingle index — the SHARED batch
-        # definition, candidate-restricted
-        pairs = (
+        # definition, candidate-restricted. Materialized BEFORE the sink
+        # hook and the appends, so the sink writes straight from the
+        # checkpoint — pair rows never visit the driver, which is what
+        # keeps a hot (many-collision) batch from OOM-ing the coordinator
+        # at scale.
+        pairs = self._checkpoint(
             _pair_jaccard(all_inv, candidates, self.tau, sizes=all_sizes)
             .select(
                 F.col("doc_a").cast("long").alias("doc_a"),
                 F.col("doc_b").cast("long").alias("doc_b"),
                 F.col("jaccard").cast("double").alias("jaccard"),
             )
-            .persist()
         )
-        # Materialize pairs (count barrier, no row transfer to the driver)
-        # BEFORE the sink hook and the appends, so the sink writes straight
-        # from this persisted plan — pair rows never visit the driver, which
-        # is what keeps a hot (many-collision) batch from OOM-ing the
-        # coordinator at scale.
-        pairs.count()
         if on_pairs is not None:
             on_pairs(pairs)  # sink first; see the docstring's ordering contract
-        # the counts are cached-frame reads (materialized by pairs.count()
-        # above), spent to right-size the appended files — see _append
-        self._append(bands_new, "bands", n_rows=bands_new.count())
-        self._append(sizes_new, "sizes", n_rows=sizes_new.count())
+        self._append(bands_new, "bands", n_rows=n_bands)
+        self._append(sizes_new, "sizes", n_rows=n_sizes)
         # commit marker: the anti-join keys on inv, so it goes last (a
         # crash before it leaves orphan band/sizes rows; the candidate
         # distinct() and the sizes dedup absorb both on replay)
-        self._append(inv_new, "inv", n_rows=inv_new.count())
-        self._live = [raw_inv, bands_new, inv_new, sizes_new, pairs]
+        self._append(inv_new, "inv", n_rows=n_inv)
         return pairs
 
 
@@ -234,10 +275,10 @@ def start_dedup_stream(
 
     def process(batch: DataFrame, batch_id: int) -> None:
         def sink(pairs: DataFrame) -> None:
-            # pairs arrives persisted and already counted by add_batch, so
-            # the count is a cache read; it both replaces the isEmpty
-            # probe and right-sizes the emitted files (a 32-partition
-            # cached frame wrote 32 one-KiB files per batch otherwise)
+            # pairs arrives materialized by add_batch, so the count is a
+            # checkpoint read; it both replaces the isEmpty probe and
+            # right-sizes the emitted files (a 32-partition frame wrote 32
+            # one-KiB files per batch otherwise)
             n = pairs.count()
             if n:
                 k = max(1, min(pairs.rdd.getNumPartitions(),
